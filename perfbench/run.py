@@ -39,16 +39,20 @@ PKG = "accelerated_intelligent_document_processing_on_aws_spark"
 RUN_DIR = ROOT / ".perfbench_run"
 WORKLOADS = ("mixed", "chat_skew")
 N_BUCKETS = 64  # PipelineConfig's default, which every pass uses
-# warm-up: a fixed number of cycles, pipeline first (it runs every
-# operator the extract pass runs, and pays the cold start).  The first
-# cycle costs ~3x a warm one; later passes still fall ~5-10% over the next
-# few cycles, which a whole run cannot afford to wait out.  A fixed count
-# makes that trend the same in every run, where a stop-when-flat rule
-# would vary it.
-WARM_CYCLES = 3
-WARM_CYCLE = ("pipeline", "extract")
-# timed passes, repeated until the window closes
-SCHEDULE = ("extract", "pipeline")
+# warm-up: a fixed list of passes, pipeline first (it runs every operator
+# the extract pass runs, and pays the cold start, ~4x a warm pass).  After
+# it, extract passes are warm, while pipeline passes keep falling for
+# three more passes and then level off within the host's noise; a whole
+# run cannot afford more.  A fixed list puts every run at the same point
+# of that trend, where a stop-when-flat rule would vary it.
+WARM_UP = ("pipeline", "extract", "pipeline", "pipeline")
+# timed passes: until the window closes, the kind with the least time
+# spent so far runs next.  On a shared VM the host's speed swings by ~25%
+# from one second to the next, so a metric's spread falls with the
+# seconds it is timed over; this gives each kind an equal share of the
+# window.
+TIMED = ("extract", "pipeline")
+MIN_PASSES = 2
 
 
 def log(msg: str) -> None:
@@ -77,6 +81,27 @@ def worker_pids(root_pid: int) -> list:
         if pid != root_pid and p == root_pid and b"pyspark.daemon" in cmd.get(pid, b""):
             out.append(pid)
     return out
+
+
+def host_probe_ms() -> float:
+    """Median time of a fixed pure-Python loop (~10 ms each): the host's
+    own speed, logged with every run so host drift can be told apart from
+    a change in the program."""
+    ts = []
+    for _ in range(9):
+        t = time.perf_counter()
+        acc = 0
+        for i in range(150_000):
+            acc += i * i % 7
+        ts.append((time.perf_counter() - t) * 1e3)
+    return statistics.median(ts)
+
+
+def cpu_times() -> tuple:
+    """(steal, total) jiffies of the whole host since boot."""
+    with open("/proc/stat") as fh:
+        v = [int(x) for x in fh.readline().split()[1:]]
+    return (v[7] if len(v) > 7 else 0), sum(v)
 
 
 class RssSampler:
@@ -126,10 +151,6 @@ def start_session(work: Path, cores: int, trace: bool):
         "spark.sql.warehouse.dir": str(work / "warehouse"),
         # no hsperfdata file: HotSpot writes it to /tmp whatever tmpdir is
         "spark.driver.defaultJavaOptions": f"-Djava.io.tmpdir={work / 'tmp'} -XX:-UsePerfData",
-        # split the scan into several tasks per core, as a table of many
-        # files would be: with one task per core, a pass waits on whichever
-        # core the host slows down most
-        "spark.sql.files.minPartitionNum": str(4 * cores),
     }
     if trace:
         (work / "events").mkdir()
@@ -328,26 +349,32 @@ class Tally:
 
 
 def warm_up(b: Bench, tally: Tally) -> None:
-    """Run the warm-up cycles; their passes count as attempted, not timed."""
-    for k in range(WARM_CYCLES):
-        t = time.perf_counter()
-        for kind in WARM_CYCLE:
-            tally.run(b, kind, record=False)
-        log(f"warm-up cycle {k}: {time.perf_counter() - t:.2f}s")
+    """Run the warm-up passes; they count as attempted, not timed."""
+    for kind in WARM_UP:
+        log(f"warm-up {kind}: {tally.run(b, kind, record=False)}")
 
 
 def timed_window(b: Bench, tally: Tally, seconds: float) -> None:
     deadline = time.perf_counter() + seconds
-    i = 0
-    while i < len(SCHEDULE) or time.perf_counter() < deadline:
-        tally.run(b, SCHEDULE[i % len(SCHEDULE)])
-        i += 1
+    spent = dict.fromkeys(TIMED, 0.0)
+    runs = dict.fromkeys(TIMED, 0)
+    while time.perf_counter() < deadline or min(runs.values()) < MIN_PASSES:
+        kind = min(TIMED, key=lambda k: (runs[k] >= MIN_PASSES, spent[k]))
+        t = time.perf_counter()
+        tally.run(b, kind)
+        spent[kind] += time.perf_counter() - t
+        runs[kind] += 1
 
 
 def measure(b: Bench, tally: Tally, args, rss: RssSampler, setup_s: float) -> dict:
+    probe = host_probe_ms()
+    cpu0 = cpu_times()
     rss.on.set()
     timed_window(b, tally, args.seconds)
     rss.on.clear()
+    cpu1 = cpu_times()
+    steal = (cpu1[0] - cpu0[0]) / max(1, cpu1[1] - cpu0[1])
+    log(f"host: probe {probe:.2f} ms before the window, {host_probe_ms():.2f} ms after; steal {steal:.1%}")
     tally.apply_final(b.final_checks())
     log("final checks done")
     log(f"passes: { {k: [round(t, 3) for t in v] for k, v in tally.times.items()} }")
@@ -365,7 +392,11 @@ def traced(b: Bench, tally: Tally, args, cores: int, start_s: float, warm_s: flo
     from perfbench import check, tracing
 
     sc = b.spark.sparkContext
-    m = {"session.start_s": (start_s, "s"), "session.warmup_s": (warm_s, "s")}
+    m = {
+        "session.start_s": (start_s, "s"),
+        "session.warmup_s": (warm_s, "s"),
+        "host.probe_ms": (host_probe_ms(), "ms"),
+    }
 
     texts = check.read_table(b.table)["text"].to_pylist()
     ktimes = tracing.kernel_times(texts)
@@ -537,7 +568,6 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [str(ROOT)] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
-    os.environ.setdefault("IDP_DRIVER_MEM", "2g")
     sys.path.insert(0, str(ROOT))
     cores = len(os.sched_getaffinity(0))
     seed = args.seed % 2**20

@@ -262,8 +262,10 @@ def plan_counts(group: dict) -> dict:
 
 
 def task_skew(group: dict) -> float:
-    """max / median task run time of the group's last stage (the one that
-    reads the conv-keyed exchange and runs the window)."""
-    runs = [t[0] for t in group["stages"][max(group["stages"])]]
+    """max / median task run time of the window stage: the group's
+    costliest stage that writes no shuffle, i.e. the one that reads the
+    conv-keyed exchange and runs the window."""
+    stages = [ts for ts in group["stages"].values() if not any(t[1] for t in ts)]
+    runs = [t[0] for t in max(stages, key=lambda ts: sum(t[0] for t in ts))]
     med = statistics.median(runs)
     return max(runs) / med if med > 0 else 1.0
