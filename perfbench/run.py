@@ -39,20 +39,23 @@ PKG = "accelerated_intelligent_document_processing_on_aws_spark"
 RUN_DIR = ROOT / ".perfbench_run"
 WORKLOADS = ("mixed", "chat_skew")
 N_BUCKETS = 64  # PipelineConfig's default, which every pass uses
-# warm-up: a fixed list of passes, pipeline first (it runs every operator
-# the extract pass runs, and pays the cold start, ~4x a warm pass).  After
-# it, extract passes are warm, while pipeline passes keep falling for
-# three more passes and then level off within the host's noise; a whole
-# run cannot afford more.  A fixed list puts every run at the same point
-# of that trend, where a stop-when-flat rule would vary it.
-WARM_UP = ("pipeline", "extract", "pipeline", "pipeline")
-# timed passes: until the window closes, the kind with the least time
-# spent so far runs next.  On a shared VM the host's speed swings by ~25%
+# warm-up: a fixed list of passes.  Pipeline passes first: the first
+# pays the cold start, ~4x a warm pass; the next ones keep falling (mostly
+# task time: the JVM and Python workers warming up) and level off within
+# the host's noise from about the fifth.  Then one extract pass: the first
+# extract pass of a session reads ~20% above the next ones even after
+# the pipeline passes.  A whole run cannot afford more.  A fixed list
+# puts every run at the same point of those trends, where a
+# stop-when-flat rule would vary it.
+WARM_UP = ("pipeline",) * 4 + ("extract",)
+# timed passes: until the window closes, the kind furthest below its share
+# of the window runs next.  On a shared VM the host's speed swings by ~25%
 # from one second to the next, so a metric's spread falls with the
-# seconds it is timed over; this gives each kind an equal share of the
-# window.
-TIMED = ("extract", "pipeline")
-MIN_PASSES = 2
+# seconds it is timed over.  A pipeline pass is ~3x an extract pass, so
+# pipeline gets 60% of the window: three passes or more on a slow host,
+# where an even split left it two.
+TIMED = {"extract": 0.4, "pipeline": 0.6}
+MIN_PASSES = 3
 
 
 def log(msg: str) -> None:
@@ -359,7 +362,7 @@ def timed_window(b: Bench, tally: Tally, seconds: float) -> None:
     spent = dict.fromkeys(TIMED, 0.0)
     runs = dict.fromkeys(TIMED, 0)
     while time.perf_counter() < deadline or min(runs.values()) < MIN_PASSES:
-        kind = min(TIMED, key=lambda k: (runs[k] >= MIN_PASSES, spent[k]))
+        kind = min(TIMED, key=lambda k: (runs[k] >= MIN_PASSES, spent[k] / TIMED[k]))
         t = time.perf_counter()
         tally.run(b, kind)
         spent[kind] += time.perf_counter() - t
