@@ -13,7 +13,7 @@ Cross-engine parity rules used throughout:
 - Every computed column aliased identically on both sides.
 
 Round 5: most backlog queries are certified through ``q_suite_*`` family
-suites — each suite melts 5-7 member queries to one long-format union
+suites — each suite melts 4-7 member queries to one long-format union
 with an identically-melted DuckDB oracle (see
 ``accelerated_intelligent_document_processing_on_aws_spark/certify.py``
 and the ``_SUITES`` / ``_MELT_SCHEMAS`` registry below); member
@@ -16285,7 +16285,7 @@ _SUITES = {
 
 CERT_WINDOW = 50
 
-# r5 window: every slot is either a family suite covering 5-7 backlog
+# r5 window: every slot is either a family suite covering 4-7 backlog
 # members, a backlog standalone (q1 marquee, q_validate_feed's timestamp
 # schema, rows-only q_compress_ratio), the new q_ivfpq_recall audit, or
 # the flagship re-certification pad (q_transcript_extract golden).

@@ -25,7 +25,10 @@ value equality is preserved exactly):
   format identically in Spark and DuckDB, and 64-bit hashes stay
   byte-exact instead of losing low bits to a double;
 - NULL in either lane becomes the literal token ``'null'`` on both
-  sides, so the melt columns are never-null and dtype-stable.
+  sides, so the melt columns are never-null and dtype-stable; a
+  string-lane NULL also sets ``value_num = 1.0`` (the lane's values
+  otherwise carry ``0.0``), so it can never alias the literal string
+  ``'null'``.
 
 Column kinds are FROZEN per member in the registry's schema map
 (derived from the member's certified Spark schema) rather than sniffed
@@ -100,7 +103,7 @@ def melt_spark(df: DataFrame, qname: str, schema: list[tuple[str, str]]) -> Data
             )
             s = F.when(c.isNull(), F.lit(NULL_TOKEN)).otherwise(F.lit(""))
         else:
-            num = F.lit(0.0)
+            num = F.when(c.isNull(), F.lit(1.0)).otherwise(F.lit(0.0))
             s = F.coalesce(c.cast("string"), F.lit(NULL_TOKEN))
         rows.append(
             F.struct(
@@ -147,7 +150,7 @@ def melt_sql_branches(qname: str, cte: str, schema: list[tuple[str, str]]) -> li
             num = f"coalesce(ROUND(CAST({qc} AS DOUBLE), 6) + 0.0, 0.0)"
             s = f"CASE WHEN {qc} IS NULL THEN '{NULL_TOKEN}' ELSE '' END"
         else:
-            num = "0.0"
+            num = f"CASE WHEN {qc} IS NULL THEN 1.0 ELSE 0.0 END"
             s = f"coalesce(CAST({qc} AS VARCHAR), '{NULL_TOKEN}')"
         branches.append(
             f"SELECT {_sq(qname)} AS query, {_sq(colname)} AS metric,\n"

@@ -6,7 +6,8 @@ pages (``classification/service.py:1455-1603``); our rebuild generalizes
 this to per-PARTITION lineage (FIXTURES.md §4): one row per
 ``(run_id, input_snapshot_id, partition_id)`` with row/span counts, a
 metrics map, and a status mirroring the reference Status enum
-(``models.py:18``).
+(``models.py:18``).  The counts come from one groupBy(pt) aggregate over
+the persisted write frame (:func:`lineage_agg_rows`).
 
 Resume = left anti-join of the partition set against COMMITTED rows for the
 same input snapshot: a killed run restarted with the same input recomputes
@@ -231,42 +232,9 @@ def latest_done_manifest(checkpoint_path: str) -> Optional[dict]:
 PAYLOAD_KINDS = ("ocr_blocks", "html", "pdfish", "plain")
 
 
-# above this many candidate buckets the pipeline switches from
-# df.observe (8 scalar sums PER bucket riding the write job — trivial at
-# the 64-bucket default, codegen/driver blowup at cluster-scale bucket
-# counts like 4096 → 32k expressions) to a cached pre-write groupBy(pt)
-# aggregate: the write materializes the persisted frame, the aggregate
-# reads it back from the cache — still ONE scan of the input and ZERO
-# scans of the output table (pinned by tests/test_resume.py and
-# test_lineage_groupby_path).
-# Crossover between the two lineage strategies, MEASURED on the 408k-turn
-# probe write (local[32], 256 write tasks): observe's conditional sums are
-# evaluated per row by an interpreted AggregatingAccumulator — NOT
-# whole-stage codegen — so they tax the whole write stage linearly in the
-# expression count: 64 exprs (8 buckets) free, 128 exprs +38% wall,
-# 512 exprs (64 buckets) ~3x the write (5.2 s -> 15.0 s best-case).  The
-# persist+groupBy(pt) twin costs ~nothing here because the pre-write
-# fan-in already hash-partitions by (pt, sub) — the aggregate plans ZERO
-# exchange and reads the cache, never the input or output again.  Observe
-# stays for small candidate sets (the common resume tail: a few crashed
-# buckets) where it needs no cache memory at all.
-LINEAGE_OBSERVE_MAX = 8
-
-
-def lineage_metric_exprs(cond=None) -> dict:
-    """The single source of truth for the eight per-bucket lineage metrics:
-    metric name → aggregate Column.  Both lineage strategies consume this —
-    :func:`lineage_observe_exprs` with ``cond = (pt == p)`` (conditional
-    sums riding the write job) and :func:`lineage_agg_rows` with
-    ``cond=None`` (plain sums under a groupBy(pt)) — so a metric
-    redefinition can never diverge between the small-candidate-set observe
-    path and the large-bucket-count groupBy path (cross-path equality is
-    pinned by tests/test_resume.py::test_lineage_paths_agree)."""
-
-    def guarded(col_expr):
-        # sum() ignores NULLs, so when(cond, x) without otherwise() makes
-        # non-matching rows invisible — same totals as otherwise(0)
-        return col_expr if cond is None else F.when(cond, col_expr)
+def lineage_metric_exprs() -> dict:
+    """The eight per-bucket lineage metrics: metric name → aggregate
+    Column, summed under a groupBy(pt) by :func:`lineage_agg_rows`."""
 
     def kind_count(kname: str):
         # kname bound through this helper on purpose: a two-parameter
@@ -275,37 +243,16 @@ def lineage_metric_exprs(cond=None) -> dict:
         return F.size(F.filter("payload_kinds", lambda x: x == F.lit(kname)))
 
     metrics = {
-        "rows": F.sum(guarded(F.lit(1))).cast("long"),
-        "spans": F.sum(guarded(F.size("spans"))).cast("long"),
-        "bounds": F.sum(guarded(F.col("is_boundary").cast("long"))).cast("long"),
+        "rows": F.sum(F.lit(1)).cast("long"),
+        "spans": F.sum(F.size("spans")).cast("long"),
+        "bounds": F.sum(F.col("is_boundary").cast("long")).cast("long"),
         "empty": F.sum(
-            guarded((F.length("extracted_text") == 0).cast("long"))
+            (F.length("extracted_text") == 0).cast("long")
         ).cast("long"),
     }
     for k in PAYLOAD_KINDS:
-        metrics[f"kind_{k}"] = F.sum(guarded(kind_count(k))).cast("long")
+        metrics[f"kind_{k}"] = F.sum(kind_count(k)).cast("long")
     return metrics
-
-
-def lineage_observe_exprs(candidates: List[int], partition_col: str = "pt"):
-    """Per-bucket lineage aggregates as flat conditional sums for
-    ``DataFrame.observe`` — computed DURING the write job itself, so the
-    pipeline needs exactly one scan of the input and zero scans of the
-    output (SURVEY §4 names ``observe`` for this).
-
-    Expression count is 8 × len(candidates).  Observe aggregates run in an
-    interpreted per-row accumulator (not codegen), so the cost is linear in
-    the expression count and NOT trivial — measured 3x the whole write's
-    wall at 64 candidates (see LINEAGE_OBSERVE_MAX).  Above that threshold
-    the pipeline uses :func:`lineage_agg_rows` instead (groupBy over the
-    cached write frame) — same numbers, near-zero overhead.
-    """
-    exprs = []
-    for p in candidates:
-        c = F.col(partition_col) == p
-        for name, expr in lineage_metric_exprs(c).items():
-            exprs.append(expr.alias(f"{name}_{p}"))
-    return exprs
 
 
 def lineage_agg_rows(
@@ -315,15 +262,13 @@ def lineage_agg_rows(
     input_snapshot_id: str,
     partition_col: str = "pt",
 ) -> List[dict]:
-    """Large-bucket-count twin of observe-lineage: ONE hash aggregate
+    """Per-bucket lineage of the just-written frame: ONE hash aggregate
     (8 fixed expressions, independent of bucket count) grouped by the
-    partition column over the just-written frame.  Callers persist the
-    frame before the write so this aggregate reads the cache — never the
-    input a second time, never the output table.  Hash-empty candidate
-    buckets still commit with zero counts (same early-return guarantee
-    as the observe path).  Metric definitions come from
-    :func:`lineage_metric_exprs` — shared with the observe strategy."""
-    spec = lineage_metric_exprs(None)
+    partition column.  Callers persist the frame before the write so this
+    aggregate reads the cache — never the input a second time, never the
+    output table.  Hash-empty candidate buckets still commit with zero
+    counts."""
+    spec = lineage_metric_exprs()
     agg = (
         written.groupBy(F.col(partition_col).alias("_pt"))
         .agg(*[expr.alias(name) for name, expr in spec.items()])
@@ -342,9 +287,10 @@ def lineage_agg_rows(
 def lineage_rows_from_metrics(
     observed: dict, candidates: List[int], run_id: str, input_snapshot_id: str
 ) -> List[dict]:
-    """Turn the observed write-job metrics into one lineage row per
-    candidate bucket.  Every candidate commits — INCLUDING hash-empty
-    buckets (row_count 0) — so a completed run's resume early-returns
+    """Turn per-bucket metrics (``<metric>_<bucket>`` keys, as built by
+    :func:`lineage_agg_rows`) into one lineage row per candidate bucket.
+    Every candidate commits — INCLUDING hash-empty buckets
+    (row_count 0) — so a completed run's resume early-returns
     instead of re-executing the scan forever.  Lineage derives only from
     rows the current run actually wrote: stale files from an older input
     snapshot sharing the output dir can never be certified."""

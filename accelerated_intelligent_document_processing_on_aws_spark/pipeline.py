@@ -9,13 +9,15 @@ reference's service objects, ``idp_common/__init__.py:11-72``):
 
 Plan shape at scale (deliberate, §4 of SURVEY.md):
 
-* Extraction runs on SALTED partitions (``repartition(pt)`` where
-  ``pt = pmod(xxhash64(salt, conv_id), n_buckets)``) — embarrassingly
-  parallel, no conv locality needed, so a mega-conversation spreads across
-  buckets' tasks evenly. The write then reuses ``pt`` as the partition
-  column: extraction shuffle and write layout share one exchange.
-* Sectionization is the ONLY conv_id-keyed exchange (window over
-  (conv_id, turn_idx)); AQE handles residual skew.
+* Extraction needs no conv locality: a file-backed scan with enough
+  splits feeds the UDF directly, and only an UNDER-SPLIT input gets a
+  spread exchange on (pt, turn_idx mod turn_spread) first, where
+  ``pt = pmod(xxhash64(salt, conv_id), n_buckets)``.
+* Sectionization is the conv_id-keyed window exchange over
+  (conv_id, turn_idx); AQE handles residual skew.
+* The durable path then runs the write fan-in: one exchange keyed on
+  ``pt`` (plus the optional conv-bucket and sub-split keys), the write,
+  and one groupBy(pt) lineage aggregate over the persisted write frame.
 * Resume: buckets already COMMITTED for this input snapshot are
   anti-joined away before any work happens (partition-pruned scan on
   re-run; no recomputation — verified by tests/test_resume.py).
@@ -33,11 +35,10 @@ from pyspark.sql import functions as F
 from .functions.text import turn_class_col
 from .io.checkpoint import (
     CHECKPOINT_SCHEMA,
-    LINEAGE_OBSERVE_MAX,
     CheckpointStore,
     lineage_agg_rows,
-    lineage_observe_exprs,
-    lineage_rows_from_metrics,
+    # unused here, kept as a module attribute perfbench/tracing.py wraps
+    lineage_rows_from_metrics,  # noqa: F401
     input_done,
     latest_done_manifest,
     mark_input_done,
@@ -56,6 +57,9 @@ from .io.tables import (
 from .operators.common import num_partitions
 from .operators.extract import respan_with_text, with_extraction
 from .operators.sectionize import sectionize, sectionize_chunked
+
+# cap on one bucket's adaptive write sub-splits (adaptive_write_split)
+MAX_FILES_PER_BUCKET = 64
 
 
 @dataclass
@@ -101,7 +105,7 @@ class PipelineConfig:
     # pt on the RAW input scan (pt is a pure function of conv_id, so this
     # prunes to one short column and runs no extraction) and each bucket
     # gets sub-splits proportional to its share — hot buckets fan out to
-    # up to max_files_per_bucket tasks, cold buckets stay at ONE file.
+    # up to MAX_FILES_PER_BUCKET tasks, cold buckets stay at ONE file.
     # files_per_bucket remains the flat fallback (and the target mean).
     # Caveat: the pre-pass is column-pruned only for parquet input
     # (jsonl/csv feeds pay a re-parse — land them as parquet first).
@@ -109,7 +113,6 @@ class PipelineConfig:
     # (pt, conv-bucket) slices sub-split into multiple files of the SAME
     # bucket id, which a Spark bucketed table represents natively.
     adaptive_write_split: bool = False
-    max_files_per_bucket: int = 64
     # bucketed publish (VERDICT #8): when set, the output is written as a
     # managed table partitioned by pt AND bucketed by conv_id
     # (io/tables.py write_partitioned_bucketed) instead of plain
@@ -120,7 +123,7 @@ class PipelineConfig:
     # fan-in keys on (pt, pmod(hash(conv_id), conv_buckets)) — F.hash is
     # the same Murmur3 the bucket spec uses, so each write task holds
     # whole table-buckets and the file count stays n_buckets x
-    # conv_buckets per run, never tasks x buckets.
+    # conv_buckets (x sub-splits) per run, never tasks x buckets.
     bucketed_table: Optional[str] = None
     conv_buckets: int = 16
     # user plug-in point (SURVEY §2.8): the reference's post-processing
@@ -128,8 +131,9 @@ class PipelineConfig:
     # (extraction/service.py:643-711; docs/post-processing-lambda-hook.md);
     # the Spark analog is a DataFrame→DataFrame stage applied after the
     # extraction columns exist, before sectionization.  Must be a
-    # narrow/per-row transformation to keep the pipeline's two-exchange
-    # plan budget (pinned by tests/test_plans.py with a hook installed).
+    # narrow/per-row transformation so it adds no exchange to the plan:
+    # spread (under-split input only) → UDF → conv window → pt fan-in →
+    # write (pinned by tests/test_hook.py with a hook installed).
     post_extract_hook: Optional[Callable] = None
 
 
@@ -361,22 +365,27 @@ def run_pipeline(
             ~salted_bucket(F.col("conv_id"), cfg.n_buckets, cfg.salt).isin(done)
         )
     out = extract_stage(df, cfg)
-    # align the write with its partition layout: without this exchange
-    # every task holds rows of ~every bucket, so a W-task job opens
+    # the write fan-in aligns the write with its partition layout: without
+    # it every task holds rows of ~every bucket, so a W-task job opens
     # W x n_buckets parquet writers and commits W x n_buckets files PER
     # RUN (measured 2,032 files and 12.0 s for a 255k-turn run; with the
-    # exchange: 64 files, 3.3 s).  At 1000 executors that is 64k files
-    # per run vs n_buckets.  Write parallelism becomes n_buckets tasks —
-    # n_buckets is also the resume granularity, so both are sized to the
-    # cluster together (64 fits local; thousands on a real cluster).
-    # REPARTITION_BY_NUM is exempt from AQE coalescing, so the fan-in is
-    # exact.  files_per_bucket > 1 widens it: the exchange keys on
-    # (pt, sub-split of the turn hash) over n_buckets * k partitions, so
-    # write parallelism scales past the bucket count while each bucket
-    # still lands in at most k files (the writer splits a task's rows by
-    # pt dir, and each task holds ~one (pt, sub) slice).
+    # exchange: 64 files, 3.3 s).  REPARTITION_BY_NUM is exempt from AQE
+    # coalescing, so the fan-in is exact.  One key builder:
+    #   * pt: the write layout and the resume granularity;
+    #   * + pmod(hash(conv_id), conv_buckets) with bucketed_table: the same
+    #     Murmur3 as the table's bucket spec, so each task holds whole
+    #     table-buckets and writes one file per (pt, conv-bucket);
+    #   * + pmod(xxhash64(conv_id, turn_idx), k_of_pt) when some bucket
+    #     gets k > 1 sub-splits: write parallelism scales past the bucket
+    #     count while each (pt[, conv-bucket]) slice lands in at most k
+    #     files.  The sub-split only divides rows WITHIN a slice, so every
+    #     bucketed file still holds one bucket id (a Spark bucketed table
+    #     tolerates many files per bucket) and conv-keyed joins against
+    #     the table stay exchange-free (test_bucketing.py pins both).
+    # k_of_pt is files_per_bucket for every bucket, or the adaptive map.
     k = max(int(cfg.files_per_bucket), 1)
-    split_map = None
+    k_of_pt = dict.fromkeys(range(cfg.n_buckets), k)
+    k_col = F.lit(k)
     if cfg.adaptive_write_split:
         # skew-aware sub-splitting: rows per pt counted on the RAW scan
         # (pt is a pure function of conv_id — for parquet input the scan
@@ -386,9 +395,9 @@ def run_pipeline(
         # metadata-sized, <= n_buckets rows).
         # Each bucket's sub-split count is proportional to its share of
         # the total with a budget of n_buckets * files_per_bucket splits:
-        # balanced inputs land at ~files_per_bucket everywhere (same
-        # behavior as the flat path), a hot bucket fans out to up to
-        # max_files_per_bucket write tasks, cold buckets stay at 1 file.
+        # balanced inputs land at ~files_per_bucket everywhere, a hot
+        # bucket fans out to up to MAX_FILES_PER_BUCKET write tasks, cold
+        # buckets stay at 1 file.
         cnt_rows = (
             df.groupBy(
                 salted_bucket(
@@ -400,132 +409,75 @@ def run_pipeline(
         )
         total = sum(r["_c"] for r in cnt_rows)
         if total > 0:
-            split_map = {
+            k_of_pt = {
                 int(r["_pt"]): max(
                     1,
                     min(
                         int(round(r["_c"] / total * cfg.n_buckets * k)),
-                        max(int(cfg.max_files_per_bucket), 1),
+                        MAX_FILES_PER_BUCKET,
                     ),
                 )
                 for r in cnt_rows
             }
-    def _adaptive_k_col():
-        # O(1) per-row lookup: pt is dense 0..n_buckets-1, so the split
-        # counts go into a literal ARRAY indexed by pt+1 (a literal MAP
-        # would be GetMapValue — a linear key scan per row, O(n_buckets)
-        # CPU inside the write fan-in at cluster-scale bucket counts).
-        # try_element_at: ANSI-safe null (not throw) out of range;
-        # coalesce to one sub-split for any pt the count pass never saw.
-        k_arr = [split_map.get(i, 1) for i in range(cfg.n_buckets)]
-        return F.coalesce(
-            F.try_element_at(
-                F.array(*[F.lit(v) for v in k_arr]),
-                F.col("pt").cast("int") + F.lit(1),
-            ),
-            F.lit(1),
-        )
-
-    if cfg.bucketed_table is not None:
-        # align the fan-in with the TABLE buckets (same Murmur3 as the
-        # bucket spec) so the bucketed write emits one file per
-        # (pt, conv-bucket) instead of tasks x buckets.  With
-        # adaptive_write_split the hot (pt, conv-bucket) slices sub-split
-        # further (round-4 VERDICT #6: the two defenses now COMPOSE): a
-        # Spark bucketed table stores the bucket id in each FILE name and
-        # tolerates many files per bucket, and the sub-split key only
-        # divides rows WITHIN one (pt, conv-bucket) slice, so every file
-        # still holds rows of exactly one bucket id and the downstream
-        # zero-exchange join property is untouched (test_bucketing.py
-        # pins both).  Hot buckets get up to max_files_per_bucket write
-        # tasks/files; cold buckets stay at one file per conv-bucket.
-        cb = max(int(cfg.conv_buckets), 1)
-        cols = [
-            F.col("pt"),
-            F.pmod(F.hash(F.col("conv_id")), F.lit(cfg.conv_buckets)),
-        ]
-        n_parts = cfg.n_buckets * cb
-        if split_map is not None:
-            cols.append(
-                F.pmod(
-                    F.xxhash64(F.col("conv_id"), F.col("turn_idx")),
-                    _adaptive_k_col(),
-                )
+            # O(1) per-row lookup: pt is dense 0..n_buckets-1, so the
+            # split counts go into a literal ARRAY indexed by pt+1 (a
+            # literal MAP would be GetMapValue — a linear key scan per
+            # row).  try_element_at: ANSI-safe null (not throw) out of
+            # range; coalesce to one sub-split for any pt the count pass
+            # never saw.
+            k_col = F.coalesce(
+                F.try_element_at(
+                    F.array(
+                        *[F.lit(k_of_pt.get(i, 1)) for i in range(cfg.n_buckets)]
+                    ),
+                    F.col("pt").cast("int") + F.lit(1),
+                ),
+                F.lit(1),
             )
-            n_parts = max(sum(split_map.values()), cfg.n_buckets) * cb
-        out = out.repartition(n_parts, *cols)
-    elif split_map is not None:
-        out = out.repartition(
-            max(sum(split_map.values()), cfg.n_buckets),
-            F.col("pt"),
-            F.pmod(
-                F.xxhash64(F.col("conv_id"), F.col("turn_idx")),
-                _adaptive_k_col(),
-            ),
+    keys = [F.col("pt")]
+    n_parts = max(sum(k_of_pt.values()), cfg.n_buckets)
+    if cfg.bucketed_table is not None:
+        keys.append(F.pmod(F.hash(F.col("conv_id")), F.lit(cfg.conv_buckets)))
+        n_parts *= max(int(cfg.conv_buckets), 1)
+    if max(k_of_pt.values()) > 1:
+        keys.append(
+            F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), k_col)
         )
-    elif k == 1:
-        out = out.repartition(cfg.n_buckets, F.col("pt"))
-    else:
-        out = out.repartition(
-            cfg.n_buckets * k,
-            F.col("pt"),
-            F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(k)),
-        )
+    out = out.repartition(n_parts, *keys)
 
-    # incremental deltas land one directory level down (ingest=<snap>):
-    # dynamic partition overwrite then only ever touches THIS delta's pt
-    # buckets — prior ingests' files are physically untouchable by this
-    # run, and readers of output_path see ingest as a partition column
-    sink_path = (
-        os.path.join(output_path, f"ingest={snap}") if incremental
-        else output_path
-    )
+    # lineage: persist the write frame, write it (which materializes the
+    # cache), then run ONE fixed-width groupBy(pt) aggregate against the
+    # cache — one scan of the input, zero scans of the output.  A resume
+    # tail caches only its few buckets' rows.  Every candidate bucket
+    # commits, including hash-empty ones, so a completed run's rerun
+    # early-returns above.
+    from pyspark import StorageLevel
 
-    def _sink(frame) -> str:
-        """Write to the configured sink; returns the manifest location."""
+    out = out.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         if cfg.bucketed_table is not None:
-            return write_partitioned_bucketed(
-                frame,
+            manifest_loc = write_partitioned_bucketed(
+                out,
                 cfg.bucketed_table,
                 partition_col="pt",
                 bucket_col="conv_id",
                 sort_cols=("conv_id", "turn_idx"),
                 n_buckets=cfg.conv_buckets,
             )
-        write_partitioned(frame, sink_path, "pt")
-        return sink_path
-
-    if len(candidates) <= LINEAGE_OBSERVE_MAX:
-        # small candidate sets (the common resume tail — a few crashed
-        # buckets): lineage rides the WRITE job via df.observe, zero cache
-        # memory, no re-read of the output table.  Every candidate bucket
-        # commits, including hash-empty ones, so a completed run's rerun
-        # early-returns above.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"lineage_{run_id}")
-        out = out.observe(obs, *lineage_observe_exprs(candidates))
-        manifest_loc = _sink(out)
-        lineage_rows = lineage_rows_from_metrics(
-            obs.get, candidates, run_id, snap
-        )
-    else:
-        # full runs / large candidate sets: observe's interpreted per-row
-        # conditional sums tax the whole write stage linearly in the
-        # expression count (measured 3x write wall at 64 buckets — see
-        # LINEAGE_OBSERVE_MAX), so persist the write frame and run ONE
-        # fixed-width groupBy(pt) aggregate against the cache.  The
-        # pre-write fan-in already hash-partitions by (pt, ...), so the
-        # aggregate plans ZERO exchange; still one scan of the input (the
-        # write materializes the cache) and zero scans of the output.
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            manifest_loc = _sink(out)
-            lineage_rows = lineage_agg_rows(out, candidates, run_id, snap)
-        finally:
-            out.unpersist()
+        else:
+            # incremental deltas land one directory level down
+            # (ingest=<snap>): dynamic partition overwrite then only ever
+            # touches THIS delta's pt buckets — prior ingests' files are
+            # physically untouchable by this run, and readers of
+            # output_path see ingest as a partition column
+            manifest_loc = (
+                os.path.join(output_path, f"ingest={snap}") if incremental
+                else output_path
+            )
+            write_partitioned(out, manifest_loc, "pt")
+        lineage_rows = lineage_agg_rows(out, candidates, run_id, snap)
+    finally:
+        out.unpersist()
     # Arrow local relation, NOT createDataFrame(list): the pickled-rows
     # path evaluates through spawned Python workers and costs a flat
     # ~4.5-7.5 s PER ACTION on this host for even 64 rows; the pandas

@@ -399,7 +399,7 @@ def main() -> None:
 
     # durable-write twin of the flagship: the FULL production path
     # (run_pipeline = extraction + sectionization + partitioned parquet
-    # write + observe-lineage + checkpoint commit) over the probe input —
+    # write + groupBy(pt) lineage + checkpoint commit) over the probe input —
     # so the headline extraction number is accompanied by an end-to-end
     # turns/sec that includes a real sink, not just a noop
     pipe_tps = None

@@ -56,7 +56,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001", out: str = "PLANS.md") -> None:
         "Python column = Arrow-batched stages only.",
         "",
         "Round 5: `q_suite_*` entries are certification suites — ONE unioned",
-        "plan over 5-7 member queries (certify.py melt), so their counts are",
+        "plan over 4-7 member queries (certify.py melt), so their counts are",
         "the SUM of their members'; a suite inherits BNLJ permission iff a",
         "member carries it (test_plans.py resolves membership).  The",
         "q_ivfpq_recall sweep carries the brute-force exact denominator",

@@ -200,3 +200,72 @@ def test_pipeline_bucketed_partial_resume(spark, tmp_path_factory):
         F.count("*").alias("n")
     )
     assert _n_exchanges(agg) == 0
+
+
+def test_pipeline_bucketed_files_per_bucket_subsplits(spark, tmp_path_factory):
+    """bucketed_table with a flat files_per_bucket=k sub-splits inside each
+    (pt, conv-bucket) slice: at most k files per slice, more than one for
+    a busy slice, every file still named for one table bucket, rows equal
+    the plain run, and conv-keyed aggregates and joins plan zero
+    exchanges."""
+    import glob
+    import os
+    import re
+    from collections import Counter
+
+    import accelerated_intelligent_document_processing_on_aws_spark as pkg
+    from accelerated_intelligent_document_processing_on_aws_spark.datagen.transcripts import (
+        write_transcripts,
+    )
+    from accelerated_intelligent_document_processing_on_aws_spark.io.tables import (
+        write_bucketed,
+    )
+
+    root = tmp_path_factory.mktemp("pipe_bkt_k")
+    inp = str(root / "in")
+    write_transcripts(
+        spark, inp, n_convs=40, mean_turns=6, skew_convs=1, skew_factor=20
+    )
+    k, conv_buckets = 4, 4
+    cfg = pkg.PipelineConfig(
+        n_buckets=8,
+        bucketed_table="bkt.pipe_k",
+        conv_buckets=conv_buckets,
+        files_per_bucket=k,
+    )
+    s1 = pkg.run_pipeline(spark, inp, str(root / "unused"), str(root / "ck"), cfg)
+    assert s1["partitions_committed"] == 8
+
+    loc = [
+        r.data_type
+        for r in spark.sql("DESCRIBE FORMATTED bkt.pipe_k").collect()
+        if r.col_name == "Location"
+    ][0].removeprefix("file:")
+    per_slice = Counter()
+    for f in glob.glob(os.path.join(loc, "pt=*", "*.parquet")):
+        m = re.search(r"_(\d{5})[_.]", os.path.basename(f))
+        assert m, f"bucketed file name missing bucket id: {f}"
+        bucket = int(m.group(1))
+        assert bucket < conv_buckets, f
+        per_slice[(os.path.basename(os.path.dirname(f)), bucket)] += 1
+    assert max(per_slice.values()) <= k, per_slice
+    assert max(per_slice.values()) > 1, per_slice  # the sub-split is live
+
+    got = spark.table("bkt.pipe_k")
+    agg = got.groupBy("conv_id").agg(F.count("*").alias("n"))
+    assert _n_exchanges(agg) == 0
+    meta = got.select("conv_id").distinct().withColumn("flag", F.lit(1))
+    write_bucketed(meta, "bkt.pipe_k_meta", "conv_id", n_buckets=conv_buckets,
+                   sort_col="conv_id")
+    joined = got.join(spark.table("bkt.pipe_k_meta").hint("merge"), "conv_id")
+    assert _n_exchanges(joined) == 0
+    assert joined.count() == got.count()
+
+    plain_out = str(root / "plain_out")
+    pkg.run_pipeline(spark, inp, plain_out, str(root / "plain_ck"),
+                     pkg.PipelineConfig(n_buckets=8))
+    key = ["conv_id", "turn_idx"]
+    plain_cols = spark.read.parquet(plain_out).columns
+    a = spark.read.parquet(plain_out).orderBy(*key).collect()
+    b = got.orderBy(*key).select(*plain_cols).collect()
+    assert a == b

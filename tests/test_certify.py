@@ -64,9 +64,36 @@ def test_melt_matches_duckdb_on_handmade_member(spark):
     # the -0.0 collapsed to +0.0 on both sides
     zrows = [r for r in got if r[1] == "z" and r[3] == ""]
     assert zrows and all(str(r[2]) == "0.0" for r in zrows)
-    # NULLs became the token in the right lane
-    assert ("q_fake", "label", 0.0, "null") in got
+    # NULLs became the token in the right lane; a string-lane NULL also
+    # carries value_num 1.0
+    assert ("q_fake", "label", 1.0, "null") in got
+    assert ("q_fake", "flag", 1.0, "null") in got
     assert ("q_fake", "score", 0.0, "null") in got
+
+
+def test_melt_null_differs_from_literal_null_string(spark):
+    """A SQL NULL and the literal string 'null' must melt to different
+    rows, identically in Spark and DuckDB — otherwise a member returning
+    NULL where its oracle returns 'null' (or the reverse) would certify."""
+    schema = [("label", "str")]
+    sides = {"null_side": None, "literal_side": "null"}
+    spark_melts, sql_melts = {}, {}
+    for name, v in sides.items():
+        df = spark.createDataFrame([(v,)], "label string")
+        spark_melts[name] = [
+            tuple(r) for r in certify.melt_spark(df, "q_fake", schema).collect()
+        ]
+        lit = "CAST(NULL AS VARCHAR)" if v is None else f"'{v}'"
+        sql = certify.suite_sql(
+            ["q_fake"],
+            {"q_fake": f"SELECT {lit} AS label"},
+            {"q_fake": "label=str"},
+        )
+        sql_melts[name] = [
+            tuple(r) for r in duckdb.connect().execute(sql).fetchall()
+        ]
+    assert spark_melts["null_side"] != spark_melts["literal_side"]
+    assert sql_melts == spark_melts
 
 
 def test_melt_schema_drift_fails_loudly(spark):
@@ -83,7 +110,7 @@ def test_registry_suites_cover_every_member_exactly_once():
     seen = {}
     sqls = em._member_sql()
     for suite, members in em._SUITES.items():
-        assert 2 <= len(members) <= 7, (suite, len(members))
+        assert 4 <= len(members) <= 7, (suite, len(members))
         for m in members:
             assert m not in seen, f"{m} in both {seen.get(m)} and {suite}"
             seen[m] = suite

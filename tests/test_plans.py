@@ -407,3 +407,101 @@ def test_chunked_sectionize_single_big_exchange(spark):
     assert n_ops(p, "Exchange") <= 3  # big window + two tiny meta shuffles
     assert n_ops(p, "BroadcastHashJoin") == 1
     assert n_ops(p, "SortMergeJoin") == 0
+
+
+@pytest.fixture(scope="module")
+def skewed_parquet(spark, tmp_path_factory):
+    from accelerated_intelligent_document_processing_on_aws_spark.datagen.transcripts import (
+        write_transcripts,
+    )
+
+    inp = str(tmp_path_factory.mktemp("fanin") / "in")
+    write_transcripts(
+        spark, inp, n_convs=40, mean_turns=6, skew_convs=1, skew_factor=20
+    )
+    return inp
+
+
+class _AtSink(Exception):
+    """Raised by the capturing sink: the plan is read, nothing is written."""
+
+
+def _fanin_exchange(spark, monkeypatch, inp, cfg, root):
+    """(keys, partition count) of run_pipeline's write fan-in, read from
+    the physical plan of the frame handed to the sink.  The fan-in is the
+    top-most exchange (formatted explain numbers nodes leaves-first)."""
+    import re
+
+    import accelerated_intelligent_document_processing_on_aws_spark.pipeline as pl
+
+    seen = {}
+
+    def sink(frame, *args, **kwargs):
+        seen["plan"] = plan_of(frame)
+        raise _AtSink
+
+    monkeypatch.setattr(pl, "write_partitioned", sink)
+    monkeypatch.setattr(pl, "write_partitioned_bucketed", sink)
+    with pytest.raises(_AtSink):
+        pl.run_pipeline(spark, inp, f"{root}/out", f"{root}/ck", cfg)
+    exchanges = re.findall(
+        r"^\((\d+)\) Exchange\nInput .*\n"
+        r"Arguments: hashpartitioning\((.*)\), REPARTITION_BY_NUM",
+        seen["plan"],
+        re.MULTILINE,
+    )
+    args = re.sub(r"#\d+", "", max(exchanges, key=lambda e: int(e[0]))[1])
+    keys, n = args.rsplit(", ", 1)
+    return keys, int(n)
+
+
+_SUB = "pmod(xxhash64(conv_id, turn_idx, 42), {})"
+_ADAPTIVE_K = (
+    "cast(coalesce(element_at([6,1,1,2,2,2,2,1], (pt + 1), None, false), 1) "
+    "as bigint)"
+)
+_CONV_BUCKET = "pmod(hash(conv_id, 42), 4)"
+
+
+@pytest.mark.parametrize(
+    "cfg_kwargs, keys, n_parts",
+    [
+        ({}, "pt", 64),
+        ({"n_buckets": 8, "files_per_bucket": 4}, "pt, " + _SUB.format(4), 32),
+        (
+            {"n_buckets": 8, "adaptive_write_split": True, "files_per_bucket": 2},
+            "pt, " + _SUB.format(_ADAPTIVE_K),
+            17,
+        ),
+        ({"n_buckets": 8, "bucketed_table": "t", "conv_buckets": 4},
+         "pt, " + _CONV_BUCKET, 32),
+        (
+            {"n_buckets": 8, "bucketed_table": "t", "conv_buckets": 4,
+             "adaptive_write_split": True, "files_per_bucket": 2},
+            f"pt, {_CONV_BUCKET}, " + _SUB.format(_ADAPTIVE_K),
+            68,
+        ),
+        # sub-splits inside each (pt, conv-bucket) slice, like the
+        # adaptive map does
+        (
+            {"n_buckets": 8, "bucketed_table": "t", "conv_buckets": 4,
+             "files_per_bucket": 4},
+            f"pt, {_CONV_BUCKET}, " + _SUB.format(4),
+            128,
+        ),
+    ],
+    ids=["default", "files4", "adaptive", "bucketed", "bucketed_adaptive",
+         "bucketed_files4"],
+)
+def test_write_fanin_exchange_per_config(
+    spark, skewed_parquet, monkeypatch, tmp_path, cfg_kwargs, keys, n_parts
+):
+    """One key builder plans the durable write fan-in: pt, then the
+    conv-bucket hash for a bucketed table, then a sub-split when some
+    bucket gets more than one (flat files_per_bucket or the adaptive
+    per-bucket map, here [6,1,1,2,2,2,2,1] for the skewed input);
+    partitions = max(sum of sub-splits, n_buckets) x conv_buckets-or-1."""
+    got = _fanin_exchange(
+        spark, monkeypatch, skewed_parquet, PipelineConfig(**cfg_kwargs), tmp_path
+    )
+    assert got == (keys, n_parts)

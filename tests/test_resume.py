@@ -160,9 +160,9 @@ def test_empty_input_and_single_scan(spark, tmp_path):
     r1 = run_pipeline(spark, inp, out, cp, CFG)
     jobs = sc.statusTracker().getJobIdsForGroup("pl_first")
     sc.setJobGroup(None, None)
-    # one scan+write (AQE splits it into up to 3 sub-jobs) + 1 footer
-    # inference + 1 tiny lineage append = <=6 (CFG's 8 buckets stay on
-    # the observe path); the old output read-back added its own
+    # one scan+write (AQE splits it into up to 3 sub-jobs) + the lineage
+    # aggregate over the cached write frame + 1 footer inference + 1 tiny
+    # lineage append = <=6; an output read-back would add its own
     # inference+scan jobs on top — pinned out by this bound
     assert len(jobs) <= 6, f"pipeline ran {len(jobs)} jobs: {jobs}"
     assert r1["partitions_written"] == 0 and not r1["resumed"]
@@ -239,21 +239,16 @@ def test_pipeline_empty_input_commits_and_resumes(spark, tmp_path):
 
 
 def test_lineage_groupby_path_large_bucket_count(spark, tmp_path):
-    """Above LINEAGE_OBSERVE_MAX candidate buckets the pipeline swaps
-    observe-lineage (8 expressions PER bucket — codegen blowup at
-    cluster-scale counts) for one fixed-width groupBy(pt) aggregate over
-    the persisted write frame.  Same lineage numbers, same resume
-    semantics, no output-table read-back (job-count bound)."""
-    from accelerated_intelligent_document_processing_on_aws_spark.io.checkpoint import (
-        LINEAGE_OBSERVE_MAX,
-    )
-
+    """At cluster-scale bucket counts lineage stays one fixed-width
+    groupBy(pt) aggregate over the persisted write frame (8 expressions,
+    independent of the bucket count): lineage sums match the table,
+    resume early-returns, and there is no output-table read-back
+    (job-count bound)."""
     inp, outp, ckpt = (
         str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
     write_transcripts(spark, inp, n_convs=40, mean_turns=5)
     cfg = PipelineConfig(n_buckets=1024)
-    assert cfg.n_buckets > LINEAGE_OBSERVE_MAX
 
     sc = spark.sparkContext
     sc.setJobGroup("pl_big", "groupBy-lineage run")
@@ -279,38 +274,6 @@ def test_lineage_groupby_path_large_bucket_count(spark, tmp_path):
 
     s2 = run_pipeline(spark, inp, outp, ckpt, cfg)
     assert s2["resumed"] and s2["partitions_committed"] == 0
-
-
-def test_lineage_paths_agree(spark, tmp_path, monkeypatch):
-    """The observe strategy and the groupBy(pt) strategy must record
-    IDENTICAL lineage for the same input and bucket count — both consume
-    the shared metric spec (checkpoint.lineage_metric_exprs), and this
-    pins that a future metric edit cannot silently diverge between the
-    small-resume-tail path and the full-run path."""
-    import accelerated_intelligent_document_processing_on_aws_spark.pipeline as pl
-
-    inp = str(tmp_path / "in")
-    write_transcripts(
-        spark, inp, n_convs=25, mean_turns=5, skew_convs=1, skew_factor=8
-    )
-    cfg = PipelineConfig(n_buckets=8)  # == LINEAGE_OBSERVE_MAX → observe path
-
-    out_o, cp_o = str(tmp_path / "out_o"), str(tmp_path / "cp_o")
-    run_pipeline(spark, inp, out_o, cp_o, cfg)
-
-    # same run again with the observe path disabled → groupBy path
-    monkeypatch.setattr(pl, "LINEAGE_OBSERVE_MAX", 0)
-    out_g, cp_g = str(tmp_path / "out_g"), str(tmp_path / "cp_g")
-    run_pipeline(spark, inp, out_g, cp_g, cfg)
-
-    def lineage(cp):
-        return sorted(
-            (r.partition_id, r.row_count, r.span_count, dict(r.metrics))
-            for r in spark.read.parquet(cp).collect()
-        )
-
-    assert lineage(cp_o) == lineage(cp_g)
-    assert _rows(spark, out_o) == _rows(spark, out_g)
 
 
 def test_files_per_bucket_widens_write_parallelism(spark, tmp_path):
